@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra benchmark main for optimization work (round 6) — NOT part of the
   * driver contract and never replaces [[Bench]]: times a subset of the
   * declared queries with the same methodology (noop sink, warm-up + N
-  * timed reps, min + median reported) and the same session configuration
-  * as [[Bench.session]], so numbers are comparable to phase-1 entries.
+  * timed reps, min + median reported) and the session configuration of
+  * [[BenchRun.sessionBuilder]], so numbers are comparable to phase-1
+  * entries.
   *
   * Usage: runMain graft.BenchExtra [reps] [query...]  (default: all)
   * Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -19,16 +18,7 @@ object BenchExtra {
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-benchextra")
-      .config("spark.sql.shuffle.partitions", 128)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
+    val spark = BenchRun.sessionBuilder(s"local[$cpus]", "graft-benchextra", 128)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def median(xs: Seq[Double]): Double = {

@@ -33,6 +33,27 @@ object BenchRun {
       .map { kv => val Array(k, v) = kv.split("=", 2); k.trim -> v.trim }
       .toMap).getOrElse(Map.empty)
 
+  /** Executor heap of the local-cluster master, in MB. */
+  private val ExecMemMb = 6144
+
+  /** The session configuration of `Bench.session`, shared by the
+    * measurement mains outside the Bench/Verify contract (`BenchRun`,
+    * [[BenchExtra]], [[graft.tools.PlanDump]]) so their numbers and plans
+    * stay comparable to phase-1 entries. */
+  private[graft] def sessionBuilder(master: String, appName: String,
+      shuffleParts: Int): SparkSession.Builder = SparkSession.builder()
+    .master(master)
+    .appName(appName)
+    .config("spark.sql.shuffle.partitions", shuffleParts)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.ansi.enabled", "false")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.local.dir", "/dev/shm/graft-bench")
+    // see Bench.session: measured 2-3x at wide parallelism vs lz4
+    .config("spark.io.compression.codec", "zstd")
+    .config("spark.ui.enabled", "false")
+    .config(extraConfs)
+
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val cores = args(1).toInt
@@ -48,67 +69,25 @@ object BenchRun {
     // like adding executors to a real cluster. Without it: plain
     // local[cores] (all task threads in this JVM).
     val execCores = sys.env.get("SPARK_GRAFT_EXEC_CORES").map(_.toInt)
-    val execMemMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "6144").toInt
-    val builder0 = SparkSession.builder()
-      .appName(s"graft-benchrun-$mode-$cores")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      // see Bench.session: measured 2-3x at wide parallelism vs lz4
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .config(extraConfs)
-    val builder = execCores match {
-      case Some(ec) =>
-        val nExec = math.max(cores / ec, 1)
-        builder0
-          .master(s"local-cluster[$nExec,$ec,$execMemMb]")
-          .config("spark.executor.memory", s"${execMemMb}m")
-          // executor JVMs need the library classes + a GC/JIT pool sized
-          // to their own core count, like a real N-core executor
-          .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-          .config("spark.executor.extraJavaOptions",
-            s"-XX:ActiveProcessorCount=$ec -Djava.io.tmpdir=/dev/shm/graft-bench")
-      case None => builder0.master(s"local[$cores]")
+    val master = execCores.fold(s"local[$cores]") { ec =>
+      s"local-cluster[${math.max(cores / ec, 1)},$ec,$ExecMemMb]"
     }
-    val spark = builder.getOrCreate()
+    val builder = sessionBuilder(master, s"graft-benchrun-$mode-$cores", shuffleParts)
+    val spark = execCores.fold(builder) { ec =>
+      builder
+        .config("spark.executor.memory", s"${ExecMemMb}m")
+        // executor JVMs need the library classes + a GC/JIT pool sized
+        // to their own core count, like a real N-core executor
+        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
+        .config("spark.executor.extraJavaOptions",
+          s"-XX:ActiveProcessorCount=$ec -Djava.io.tmpdir=/dev/shm/graft-bench")
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     pass(spark, mode, warmRows, inputParts, shuffleParts) // JIT/codegen warm-up
-    // per-stage accounting for the timed pass (SPARK_GRAFT_STAGES=1):
-    // wall, summed task run time, max task — separates map from reduce
-    // and exposes straggler factors without the UI.
-    val stageStats = if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-      import org.apache.spark.scheduler._
-      val acc = new scala.collection.concurrent.TrieMap[Int, (String, Double, Double, Int)]()
-      val maxTask = new scala.collection.concurrent.TrieMap[Int, Double]()
-      val l = new SparkListener {
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          val d = e.taskInfo.duration / 1e3
-          maxTask.updateWith(e.stageId) { p => Some(math.max(p.getOrElse(0.0), d)) }
-        }
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val wall = (for { s <- si.submissionTime; c <- si.completionTime }
-            yield (c - s) / 1e3).getOrElse(-1.0)
-          acc(si.stageId) = (si.name.takeWhile(_ != '\n'),
-            wall, si.taskMetrics.executorRunTime / 1e3, si.numTasks)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      Some((acc, maxTask))
-    } else None
     val (cpu0, gc0, gcN0) = procStats()
     val elapsed = pass(spark, mode, rows, inputParts, shuffleParts)
     val (cpu1, gc1, gcN1) = procStats()
-    stageStats.foreach { case (acc, maxTask) =>
-      acc.toSeq.sortBy(_._1).foreach { case (id, (name, wall, taskSum, n)) =>
-        println(f"STAGE id=$id%d tasks=$n%d wall=$wall%.2f taskSum=$taskSum%.2f " +
-          f"maxTask=${maxTask.getOrElse(id, 0.0)}%.2f $name%s")
-      }
-    }
     // parent greps these exact markers from stdout. PROC_CPU is the
     // JVM's own consumed CPU seconds over the timed pass (JMX) — immune
     // to hypervisor steal and co-tenant noise, so core-second
@@ -132,14 +111,6 @@ object BenchRun {
       gcs.map(_.getCollectionCount).sum)
   }
 
-  /** `SPARK_GRAFT_MAXTOK`: payload-sweep diagnostic — caps n_tok in the
-    * synthetic generator so the identical pipeline pair can be measured
-    * at shrinking token payloads (see TokenSequences.synthetic). Default
-    * leaves the BASELINE n_tok distribution (mean ~503) untouched. */
-  private val maxTok: Int =
-    sys.env.get("SPARK_GRAFT_MAXTOK").map(_.toInt)
-      .getOrElse(TokenSequences.MaxTok)
-
   /** One timed pass of the scaling workload; shared by the forked main
     * above and [[Bench]]'s in-process mode so every dispatch measures
     * the IDENTICAL job. */
@@ -147,23 +118,10 @@ object BenchRun {
       inputParts: Int, shuffleParts: Int): Double = mode match {
     case "pipeline" =>
       val t0 = System.nanoTime()
-      val seqs = TokenSequences.synthetic(spark, rows, inputParts, maxTok)
-      // SPARK_GRAFT_PACK=off: A/B control for the uint16 token transport
+      val seqs = TokenSequences.synthetic(spark, rows, inputParts)
       val routed = LogPipeline.parseEnrichRoute(spark, seqs, shuffleParts,
-        packTransport = !sys.env.get("SPARK_GRAFT_PACK").contains("off"))
+        packTransport = true)
       routed.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    // decomposition diagnostic: the pipeline WITHOUT the route shuffle —
-    // generation + render + regex parse + enrich, noop-terminated. The
-    // gap between this mode's N→4N efficiency and the full pipeline's is
-    // attributable to the shuffle (tmpfs/DRAM bandwidth on this box, NIC
-    // bandwidth a real cluster scales per node).
-    case "parse" =>
-      val t0 = System.nanoTime()
-      val seqs = TokenSequences.synthetic(spark, rows, inputParts, maxTok)
-      val parsed = LogPipeline.parse(LogPipeline.renderLines(seqs).select(col("line")))
-      val enriched = LogPipeline.enrich(parsed, LogPipeline.sourceDim(spark))
-      enriched.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     case "ann" =>
       import graft.functions.EmbedGen
@@ -175,24 +133,6 @@ object BenchRun {
         .select(col("id"), EmbedGen(col("id"), lit(64)).as("emb"))
       Similarity.lshTopK(corpus, col("id"), col("emb"),
           queries, col("id"), col("emb"), k = 10)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    // decomposition diagnostic: the ANN map stage alone — generate
-    // corpus, sign + probe the broadcast query index, emit candidate
-    // tuples to a noop sink with no top-k shuffle. The gap between this
-    // mode's scaling and full `ann` is attributable to the window.
-    case "annprobe" =>
-      import graft.functions.{EmbedGen, LshCandidates, LshQueryIndex}
-      val t0 = System.nanoTime()
-      val queries = spark.range(rows, rows + 64)
-        .select(col("id"), EmbedGen(col("id"), lit(64)).as("emb"))
-      val index = LshQueryIndex.build(
-        queries.select(col("emb").cast("array<double>")).collect()
-          .map(_.getSeq[Double](0).toArray), 8, 12)
-      spark.range(0, rows, 1, inputParts)
-        .select(col("id"), EmbedGen(col("id"), lit(64)).as("emb"))
-        .select(col("id").as("nn_id"),
-          explode(LshCandidates(col("emb"), index)).as("m"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     case other => sys.error(s"unknown BenchRun mode: $other")

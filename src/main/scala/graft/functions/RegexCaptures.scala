@@ -73,6 +73,14 @@ object RegexCaptures {
   def apply(line: Column, pattern: String): Column =
     Bridge.column(RegexCaptures(Bridge.expression(line), pattern))
 
+  /** Escapes that take no operand and match no fixed literal:
+    * predefined classes, boundaries and control characters. Any other
+    * letter or digit escape (hex, octal and unicode code units, `\cA`,
+    * `\p{L}`, `\k<n>`, `\1`, `\Q...\E`, ...) consumes characters the
+    * analysis would misread as literals or structure, so it aborts the
+    * analysis. */
+  private val OperandFreeEscapes = "dDsSwWbBAzZGhHvVRXntrfae"
+
   /** Longest literal substring that MUST appear in any match of
     * `pattern` — None when the analysis cannot be sure. Deliberately
     * conservative: literals are collected only at nesting depth 0
@@ -82,9 +90,11 @@ object RegexCaptures {
     * non-capturing `(?:` aborts the analysis entirely (a global `(?i)`
     * would make literal case non-mandatory), and runs shorter than 3
     * chars are ignored (not selective enough to pay for the scan).
-    * Under-approximation is always safe: the guard only ever skips the
-    * matcher when the literal is ABSENT, which for a mandatory literal
-    * implies no match. */
+    * Escapes are whitelisted (see [[OperandFreeEscapes]]); a nested
+    * class (a union or an `&&` operand) moves the closing `]` of its
+    * class, so it aborts too, as does any `&&`. Under-approximation is
+    * always safe: the guard only ever skips the matcher when the literal
+    * is ABSENT, which for a mandatory literal implies no match. */
   private[graft] def requiredLiteral(pattern: String): Option[String] = {
     val runs = scala.collection.mutable.ArrayBuffer[String]()
     val cur = new StringBuilder
@@ -95,6 +105,11 @@ object RegexCaptures {
     def quantAt(j: Int): Boolean =
       j < n && (pattern(j) == '?' || pattern(j) == '*' ||
         pattern(j) == '+' || pattern(j) == '{')
+    // an escape whose letter/digit operand the analysis does not model
+    def opaqueEscape(j: Int): Boolean = j + 1 < n && {
+      val e = pattern(j + 1)
+      e.isLetterOrDigit && OperandFreeEscapes.indexOf(e) < 0
+    }
     // skip a quantifier (with optional reluctant/possessive suffix) at j
     def skipQuant(j0: Int): Int = {
       var j = j0
@@ -105,19 +120,26 @@ object RegexCaptures {
       if (j < n && (pattern(j) == '?' || pattern(j) == '+')) j += 1 // *?, ++, etc.
       j
     }
-    // skip a character class starting at '[' (handles leading ^/] and escapes)
+    // skip a character class starting at '[' (handles leading ^/] and
+    // escapes); n + 1 = malformed or unmodelled, the caller bails
     def skipClass(j0: Int): Int = {
       var j = j0 + 1
       if (j < n && pattern(j) == '^') j += 1
       if (j < n && pattern(j) == ']') j += 1 // literal ] first in class
       while (j < n && pattern(j) != ']') {
-        if (pattern(j) == '\\') j += 2 else j += 1
+        pattern(j) match {
+          case '\\' => if (opaqueEscape(j)) return n + 1; j += 2
+          case '[' => return n + 1 // nested class (union)
+          case '&' if pattern.startsWith("&&", j) => return n + 1 // intersection
+          case _ => j += 1
+        }
       }
-      if (j >= n) return n + 1 // malformed: force caller to bail
+      if (j >= n) return n + 1
       j + 1
     }
     while (i < n) {
       val c = pattern(i)
+      if (c == '\\' && opaqueEscape(i)) return None
       if (depth > 0) {
         // inside a group: count nothing, just track nesting faithfully
         c match {
@@ -144,24 +166,21 @@ object RegexCaptures {
         case '?' | '*' | '+' | '{' =>
           // quantifier after a group/class/anchor (atoms we never counted)
           endRun(); i = skipQuant(i)
-        case '\\' =>
-          if (i + 1 >= n) { endRun(); i += 1 }
-          else {
-            val e = pattern(i + 1)
-            if (e.isLetterOrDigit) {
-              // predefined class / anchor / backreference (\d, \b, \1, ...)
-              endRun(); i += 2; i = skipQuant(i)
-            } else if (quantAt(i + 2)) {
-              if (pattern(i + 2) == '+') { cur += e; endRun(); i = skipQuant(i + 2) }
-              else { endRun(); i = skipQuant(i + 2) }
-            } else { cur += e; i += 2 }
-          }
-        case ch =>
-          if (quantAt(i + 1)) {
+        case '\\' if i + 1 >= n => endRun(); i += 1
+        case '\\' if pattern(i + 1).isLetterOrDigit =>
+          // operand-free class / anchor / control char (\d, \b, \n, ...)
+          endRun(); i = skipQuant(i + 2)
+        case _ =>
+          // a literal atom, plain or escaped punctuation: one code point,
+          // so a quantifier after a surrogate pair applies to the pair
+          val s = if (c == '\\') i + 1 else i
+          val e = s + Character.charCount(pattern.codePointAt(s))
+          val atom = pattern.substring(s, e)
+          if (quantAt(e)) {
             // x+ keeps x (>=1 occurrence, contiguous); x?, x*, x{..} drop it
-            if (pattern(i + 1) == '+') { cur += ch; endRun(); i = skipQuant(i + 1) }
-            else { endRun(); i = skipQuant(i + 1) }
-          } else { cur += ch; i += 1 }
+            if (pattern(e) == '+') cur ++= atom
+            endRun(); i = skipQuant(e)
+          } else { cur ++= atom; i = e }
       }
     }
     if (depth != 0) return None

@@ -53,12 +53,6 @@ object Dedup {
       .select(cols.map(c => col("__row").getField(c).as(c)): _*)
   }
 
-  /** Exact-duplicate *groups*: digest -> count, for audit/reporting. */
-  def exactGroups(df: DataFrame, on: Column): DataFrame =
-    df.groupBy(md5(on.cast(StringType)).as("digest"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-
   /** Drop rows in over-sized candidate buckets (count window over the
     * bucket key, partitioning reused by the downstream bucket join). */
   private def capBuckets(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {

@@ -15,13 +15,16 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   * {{{
-  *   <root>/data/snap=<id>/<sink>/part-*.parquet   — immutable data files
-  *   <root>/_manifests/<id>.json                   — snapshot manifest
-  *   <root>/_current                               — pointer (atomic rename)
+  *   <root>/data/snap=<id>/sink=<sink>/part-*.parquet — immutable data files
+  *   <root>/_pending/<id>/_data_done                  — data write complete
+  *   <root>/_pending/<id>/<sink>.json                 — per-sink fragment
+  *   <root>/_manifests/<id>.json                      — snapshot manifest
+  *   <root>/_current                                  — pointer (atomic rename)
   * }}}
   *
   * Commit protocol (crash-safe): data files are fully written under a
-  * snapshot-scoped directory first; the manifest is written next; the
+  * snapshot-scoped directory first, then marked done; one lineage
+  * fragment per sink follows; the manifest is written next; the
   * `_current` pointer is the last, atomic step. A crash before the
   * pointer flip leaves the previous snapshot intact and readable.
   */
@@ -59,6 +62,8 @@ object Manifest {
 
 class ManifestTable(root: String) {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
+  private def pending(snapshotId: Long, file: String): Path =
+    p("_pending", s"$snapshotId", file)
 
   def currentSnapshotId: Option[Long] = {
     val cur = p("_current")
@@ -70,7 +75,38 @@ class ManifestTable(root: String) {
     Manifest.fromJson(new String(
       Files.readAllBytes(p("_manifests", s"$snapshotId.json")), StandardCharsets.UTF_8))
 
-  def currentManifest: Option[Manifest] = currentSnapshotId.map(manifest)
+  def isCommitted(snapshotId: Long): Boolean =
+    Files.exists(p("_manifests", s"$snapshotId.json"))
+
+  /** Directory of a snapshot's data files, one `sink=<sink>` partition
+    * directory per sink. */
+  def dataPath(snapshotId: Long): String = p("data", s"snap=$snapshotId").toString
+
+  /** Sink -> its partition directory, for each one under [[dataPath]]. */
+  def dataSinks(snapshotId: Long): Map[String, String] =
+    Files.list(Paths.get(dataPath(snapshotId))).iterator().asScala
+      .map(d => (d.getFileName.toString, d.toString))
+      .collect { case (n, d) if n.startsWith("sink=") => n.stripPrefix("sink=") -> d }
+      .toMap
+
+  /** Marks a snapshot's data write complete, recording the run's
+    * metrics (a JSON object) alongside. */
+  def markDataDone(snapshotId: Long, metricsJson: String): Unit =
+    atomicWrite(pending(snapshotId, "_data_done"), metricsJson)
+
+  /** The metrics recorded by [[markDataDone]]; None while the data
+    * write has not completed. */
+  def dataDone(snapshotId: Long): Option[String] = {
+    val marker = pending(snapshotId, "_data_done")
+    if (Files.exists(marker))
+      Some(new String(Files.readAllBytes(marker), StandardCharsets.UTF_8))
+    else None
+  }
+
+  /** Records one sink's lineage fragment; [[commit]] seals them. */
+  def writeFragment(snapshotId: Long, lineage: SinkLineage): Unit =
+    atomicWrite(pending(snapshotId, s"${lineage.sink}.json"),
+      Manifest(snapshotId, None, Seq(lineage)).toJson)
 
   /** Sinks already committed in an *in-progress* snapshot (manifest
     * fragments under `_pending/<id>/`) — the resume unit. */
@@ -83,31 +119,11 @@ class ManifestTable(root: String) {
       .flatMap(_.sinks).map(l => l.sink -> l).toMap
   }
 
-  /** Write one sink's data files + its lineage fragment. Idempotent per
-    * (snapshotId, sink): a completed fragment short-circuits the write —
-    * this is what makes a re-run resume instead of recompute. */
-  def writeSink(df: => DataFrame, snapshotId: Long, sink: String): SinkLineage = {
-    completedSinks(snapshotId).get(sink) match {
-      case Some(done) => done
-      case None =>
-        val dataPath = p("data", s"snap=$snapshotId", s"sink=$sink").toString
-        val out = df
-        out.write.mode("overwrite").parquet(dataPath)
-        val rows = out.sparkSession.read.parquet(dataPath).count()
-        val lineage = SinkLineage(sink, rows, dataPath)
-        Files.createDirectories(p("_pending", s"$snapshotId"))
-        atomicWrite(p("_pending", s"$snapshotId", s"$sink.json"),
-          Manifest(snapshotId, None, Seq(lineage)).toJson)
-        lineage
-    }
-  }
-
   /** Seal a snapshot: collect fragments into one manifest, flip the
     * `_current` pointer atomically. */
   def commit(snapshotId: Long): Manifest = {
     val parent = currentSnapshotId
     val m = Manifest(snapshotId, parent, completedSinks(snapshotId).values.toSeq.sortBy(_.sink))
-    Files.createDirectories(p("_manifests"))
     atomicWrite(p("_manifests", s"$snapshotId.json"), m.toJson)
     atomicWrite(p("_current"), snapshotId.toString)
     m

@@ -114,6 +114,31 @@ class PlanQualitySpec extends SparkSpec {
     assert(!plan.contains("CodegenFallback"), s"codegen fallback present:\n$plan")
   }
 
+  test("no generated method reaches the JVM's 8,000-byte JIT limit") {
+    // HotSpot never JIT-compiles a method over 8,000 bytes of bytecode:
+    // a whole-stage codegen subtree past it runs interpreted, several
+    // times slower, with unchanged results. The pipeline map stage once
+    // sat there unnoticed (CollapseProject had fused it past the limit);
+    // the largest method since measured 6,245 B (q_sql_interval). AQE
+    // off: the static plan holds every codegen subtree without running.
+    val aqe = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      val plans = Seq("q_sql_interval", "q_pipe_tokeq", "q_quality", "q_pipe_enrich",
+        "q_pipe_route").map(q => q -> SparkEntry.queries(q)(spark, dir)) :+
+        ("parseEnrichRoute(packTransport)" -> LogPipeline.parseEnrichRoute(spark,
+          TokenSequences.synthetic(spark, 100L, 2), 4, packTransport = true))
+      val largest = plans.map { case (name, df) =>
+        val stats = df.queryExecution.debug.codegenToSeq().map(_._3)
+        assert(stats.nonEmpty, s"$name has no codegen subtree")
+        name -> stats.map(_.maxMethodCodeSize).max
+      }
+      val over = largest.filter(_._2 >= 8000)
+      assert(over.isEmpty, s"methods past the JIT limit: ${over.mkString(", ")}")
+    } finally prior.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
   test("pipeline enrich broadcasts the dimension and keeps left-outer rows") {
     val seqs = TokenSequences.synthetic(spark, 1000L, 4)
     val parsed = LogPipeline.parse(LogPipeline.renderLines(seqs).select(col("line")))

@@ -47,6 +47,69 @@ class RegexGuardSpec extends SparkSpec {
     assert(lit("ab(\\d+)cd") === None)
     // escaped literal runs (\[ etc.) participate
     assert(lit("x ingest\\[(\\d+)\\]: y") === Some("x ingest["))
+    // escapes with operands (hex, unicode, octal, control) are not
+    // literal runs; nested classes and intersections move the closing ]
+    Seq("\\x41bcd", "\\u0041bcd", "\\0101bcd", "\\cAxyz1",
+      "[a[b]]cde", "[a-z&&[^aeiou]]xyz").foreach { p =>
+      assert(lit(p) === None, p)
+    }
+    // a quantifier after a surrogate pair applies to the whole code point
+    assert(lit("xy😀?abc") === Some("abc"))
+  }
+
+  test("property: a derived guard is contained in every string the regex finds") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // (regex fragment, a string it matches) from one small grammar:
+    // literals, punctuation escapes, escapes with and without operands,
+    // classes (nested and intersected), groups, alternation, quantifiers
+    val atom: Gen[(String, String)] = Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "c", "x", "y", "z", " ", ":", "-", "]", "}", "😀")
+        .map(l => (l, l)),
+      2 -> Gen.oneOf("[", "]", ".", "(", ")", "{", "}", "|", "*", "+", "?", "$", "^", "\\", "-")
+        .map(p => ("\\" + p, p)),
+      1 -> Gen.oneOf("\\x61" -> "a", "\\u0062" -> "b", "\\0143" -> "c",
+        "\\cA" -> "\u0001", "\\x{79}" -> "y", "\\Q]x\\E" -> "]x", "\\Q)(\\E" -> ")(",
+        "\\p{Lower}" -> "m", "\\d" -> "7", "\\s" -> " ", "\\w" -> "q", "\\t" -> "\t"),
+      1 -> Gen.oneOf("[abc]" -> "b", "[^a]" -> "z", "[a-c]" -> "c", "[]a]" -> "]",
+        "[a[bx]]" -> "x", "[a-z&&[^aeiou]]" -> "k", "[\\]x]" -> "]", "[\\x61y]" -> "a"))
+    val quantifier: Gen[(String, Int)] = Gen.frequency(
+      8 -> Gen.const("" -> 1),
+      1 -> Gen.oneOf("?" -> 0, "?" -> 1, "*" -> 0, "*" -> 2, "+" -> 1,
+        "+?" -> 2, "{1,2}" -> 2, "{0}" -> 0, "++" -> 1))
+    def quantified(d: Int): Gen[(String, String)] = for {
+      (r, w) <- if (d > 0) Gen.frequency(6 -> atom, 1 -> group(d - 1)) else atom
+      (q, n) <- quantifier
+    } yield (r + q, w * n)
+    def seq(d: Int): Gen[(String, String)] =
+      Gen.choose(1, 8).flatMap(Gen.listOfN(_, quantified(d)))
+        .map(xs => (xs.map(_._1).mkString, xs.map(_._2).mkString))
+    def group(d: Int): Gen[(String, String)] = for {
+      open <- Gen.oneOf("(", "(?:")
+      (a, wa) <- seq(d)
+      alt <- Gen.option(seq(d))
+    } yield (open + a + alt.fold("")("|" + _._1) + ")", wa)
+    val regex: Gen[(String, String)] = Gen.frequency(
+      9 -> seq(2),
+      1 -> Gen.zip(seq(1), seq(1)).map { case ((a, wa), (b, _)) => (s"$a|$b", wa) })
+    val noise = Gen.listOfN(6, Gen.oneOf("a", "b", "c", "x", "y", "z", " ", ":", "]"))
+      .map(_.mkString)
+    val cases = Gen.listOfN(3000, Gen.zip(regex, noise, noise))
+      .apply(Gen.Parameters.default, Seed(7L)).get
+    var guarded, found = 0
+    cases.foreach { case ((p, witness), pre, post) =>
+      val compiled = java.util.regex.Pattern.compile(p)
+      val guard = lit(p)
+      if (guard.nonEmpty) guarded += 1
+      Seq(witness, pre + witness + post, pre + post, witness.drop(1)).foreach { s =>
+        if (compiled.matcher(s).find()) {
+          found += 1
+          assert(guard.forall(s.contains), s"guard $guard rejects '$s', which /$p/ finds")
+        }
+      }
+    }
+    // the grammar must exercise both sides of the property
+    assert(guarded > 300 && found > 3000, s"guarded=$guarded found=$found")
   }
 
   test("guarded extraction is bit-identical to a bare regex run") {
