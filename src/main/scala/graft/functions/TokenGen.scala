@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Deterministic token-array generator `(seqId, nTok) -> array<int>` —
@@ -34,63 +34,6 @@ case class TokenGen(left: Expression, right: Expression) extends BinaryExpressio
     copy(left = newLeft, right = newRight)
 }
 
-/** `token_gen_packed(seqId, nTok)` — the SAME token chain as [[TokenGen]]
-  * emitted directly in the uint16 transport encoding of
-  * [[PackTokens]] (little-endian, byte-identical to
-  * `pack_tokens(token_gen(seqId, nTok))`, spec-asserted). Exists for
-  * integrity checks that compare against the packed transport: the
-  * two-step form allocates and round-trips a ~2 KB int array per row
-  * that the fused form never materializes (valid because the generator's
-  * vocab 50257 < 2^16 by construction). */
-case class TokenGenPacked(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "token_gen_packed"
-
-  override def nullSafeEval(seqId: Any, nTok: Any): Any =
-    TokenGen.computePacked(seqId.asInstanceOf[Long], nTok.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (seqId, nTok) =>
-      s"${ev.value} = graft.functions.TokenGen.computePacked($seqId, $nTok);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object TokenGenPacked {
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  def apply(seqId: Column, nTok: Column): Column =
-    Bridge.column(TokenGenPacked(Bridge.expression(seqId), Bridge.expression(nTok)))
-}
-
-/** Optimizer rule: `pack_tokens(token_gen(s, n))` → `token_gen_packed(s,
-  * n)` — bit-identical (spec-asserted) with no ~2 KB int-array
-  * intermediate per row. The composition only becomes visible to a rule
-  * after CollapseProject merges the generator and transport projections,
-  * which is why this is an optimizer rewrite rather than an API-level
-  * substitution: callers compose `PackTokens(col("tokens"))` over an
-  * arbitrary input column and the fusion fires exactly when that column
-  * IS the generator. */
-object FusePackedTokenGen
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case PackTokens(TokenGen(seqId, nTok)) => TokenGenPacked(seqId, nTok)
-    }
-
-  /** Idempotently attach to the session's experimental optimizer rules. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(this))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ this
-    }
-}
-
 object TokenGen {
   import org.apache.spark.sql.graftbridge.Bridge
 
@@ -118,8 +61,12 @@ object TokenGen {
     new IntArrayData(out) // zero-copy view; see PrimitiveArrayData
   }
 
-  /** [[compute]]'s chain written straight into the [[PackTokens]] uint16
-    * little-endian encoding — one 2-byte write per token, no int array. */
+  /** `PackTokens.compute(compute(seqId, nTok))` without the int array:
+    * [[compute]]'s chain written straight into the [[PackTokens]] uint16
+    * little-endian encoding, one 2-byte write per token. It rejects an
+    * out-of-range id exactly as [[PackTokens.compute]] does (negative
+    * seqIds can drive the chain below zero). [[PackTokens]]' codegen calls
+    * it when its child is a [[TokenGen]]. */
   def computePacked(seqId: Long, nTok: Int): Array[Byte] = {
     val s = ((seqId % M) * 131071L + 524287L) % M
     val n = if (nTok < 0) 0 else nTok
@@ -129,6 +76,7 @@ object TokenGen {
       val u = (s + j * 48271L) % M
       val v = u ^ (u >>> 15)
       val t = (((v * A + C) % M) % Vocab).toInt
+      if (t < 0 || t > 0xFFFF) throw PackTokens.outOfRange(t, j - 1)
       out((j - 1) * 2) = t.toByte
       out((j - 1) * 2 + 1) = (t >>> 8).toByte
       j += 1

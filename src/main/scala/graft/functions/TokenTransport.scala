@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -27,6 +28,15 @@ import org.apache.spark.sql.types._
   *
   * [[PackTokens]] THROWS on ids outside [0, 65535] (a corrupted id must
   * not round-trip silently) and on null elements; NULL arrays stay NULL.
+  *
+  * Over the generator itself, `pack_tokens(token_gen(s, n))`, the
+  * generated code calls [[TokenGen.computePacked]] and never builds the
+  * ~2 KB int array per row; it throws the same error on the same input.
+  * The expression decides this in its own codegen, so the fusion needs no
+  * optimizer rule or session setting and fires wherever CollapseProject
+  * puts the pack directly over the generator (the packed
+  * `LogPipeline.parseEnrichRoute`, `q_pipe_tokeq`'s expectation). The
+  * interpreted path packs the generated array.
   */
 case class PackTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
@@ -35,9 +45,22 @@ case class PackTokens(child: Expression) extends UnaryExpression {
   override def nullSafeEval(a: Any): Any =
     PackTokens.compute(a.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PackTokens.compute($a);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = child match {
+    case TokenGen(seqId, nTok) =>
+      val s = seqId.genCode(ctx)
+      val n = nTok.genCode(ctx)
+      ev.copy(code = code"""
+        ${s.code}
+        ${n.code}
+        boolean ${ev.isNull} = ${s.isNull} || ${n.isNull};
+        byte[] ${ev.value} = null;
+        if (!${ev.isNull}) {
+          ${ev.value} = graft.functions.TokenGen.computePacked(${s.value}, ${n.value});
+        }""")
+    case _ =>
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = graft.functions.PackTokens.compute($a);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -49,6 +72,9 @@ object PackTokens {
   def apply(tokens: Column): Column =
     Bridge.column(PackTokens(Bridge.expression(tokens)))
 
+  private[functions] def outOfRange(v: Int, i: Int) = new IllegalArgumentException(
+    s"pack_tokens: token id $v at index $i outside uint16 — vocabulary contract violated")
+
   def compute(a: ArrayData): Array[Byte] = {
     val n = a.numElements()
     val out = new Array[Byte](n * 2)
@@ -58,9 +84,7 @@ object PackTokens {
         throw new IllegalArgumentException(
           s"pack_tokens: null token at index $i — token arrays are non-null by contract")
       val v = a.getInt(i)
-      if (v < 0 || v > 0xFFFF)
-        throw new IllegalArgumentException(
-          s"pack_tokens: token id $v at index $i outside uint16 — vocabulary contract violated")
+      if (v < 0 || v > 0xFFFF) throw outOfRange(v, i)
       out(i * 2) = v.toByte
       out(i * 2 + 1) = (v >>> 8).toByte
       i += 1

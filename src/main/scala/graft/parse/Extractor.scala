@@ -195,7 +195,4 @@ object Extractor {
     c.cast(t)
   private def try_to_timestamp(c: Column, fmt: Column): Column =
     org.apache.spark.sql.functions.try_to_timestamp(c, fmt)
-  private def try_make_timestamp(y: Column, mo: Column, d: Column,
-      h: Column, mi: Column, s: Column): Column =
-    org.apache.spark.sql.functions.try_make_timestamp(y, mo, d, h, mi, s)
 }

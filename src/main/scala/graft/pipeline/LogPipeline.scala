@@ -176,12 +176,12 @@ object LogPipeline {
     * partitions x ln(partitions) — a fixed salt of 16 gave 48 keys over
     * 128 partitions, so birthday-collision stacking made ~4x straggler
     * reduce partitions (measured as the 16-core run's partial-width
-    * tail, BASELINE.md round 4). Default 2x partitions keeps the
+    * tail, BASELINE.md round 4). 2x partitions (at least 16) keeps the
     * straggler bound ~1.2x at every scale; rows of one sink still land
     * on a bounded partition subset. */
-  def salted(routed: DataFrame, partitions: Int, salts: Int = -1): DataFrame = {
-    val s = if (salts > 0) salts else math.max(16, 2 * partitions)
-    routed.repartition(partitions, col("sink"), pmod(hash(col("doc_id")), lit(s)))
+  def salted(routed: DataFrame, partitions: Int): DataFrame = {
+    val salts = math.max(16, 2 * partitions)
+    routed.repartition(partitions, col("sink"), pmod(hash(col("doc_id")), lit(salts)))
   }
 
   // ------------------------------------------------------------- aggregate
@@ -211,19 +211,18 @@ object LogPipeline {
     * PackTokens fails fast on any token id outside [0, 65535], so only
     * callers whose input contract pins the vocab below 2^16 (the
     * TESTDATA tables, the bench generator) should enable it. Default
-    * false: arbitrary int32 vocabularies route unpacked. */
+    * false: arbitrary int32 vocabularies route unpacked.
+    *
+    * The pack sits at the render select, not just below the route
+    * exchange, so that over generated sequences it composes directly
+    * with the generator in the collapsed projection: PackTokens' codegen
+    * then writes the packed bytes from the generator's chain and the
+    * ~2 KB int array per row is never built on the map side. The pack
+    * still runs below the exchange and the unpack above it
+    * (PlanQualitySpec). */
   def parseEnrichRoute(spark: SparkSession, seqs: DataFrame,
       partitions: Int, packTransport: Boolean = false,
       unpackAfter: Boolean = true): DataFrame = {
-    graft.functions.FusePackedTokenGen.register(spark)
-    // packTransport packs AT THE RENDER SELECT (round 6), not just below
-    // the route exchange: the pack then composes directly over the
-    // generator expression in the collapsed projection, where
-    // [[graft.functions.FusePackedTokenGen]] rewrites
-    // pack_tokens(token_gen(..)) into the fused token_gen_packed — the
-    // ~2 KB int-array intermediate per row is never materialized on the
-    // map side. Packed-vs-exchange placement is unchanged (pack below,
-    // unpack above; PlanQualitySpec).
     val rendered = renderLines(seqs).select(col("line"),
       (if (packTransport) graft.functions.PackTokens(col("tokens"))
        else col("tokens")).as("tokens_in"))

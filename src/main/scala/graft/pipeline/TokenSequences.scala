@@ -20,7 +20,6 @@ object TokenSequences {
   private val A = 1103515245L
   private val C = 12345L
   val VocabSize = 50257L
-  val MaxTok = 2048
 
   private def lcg(x: Column): Column = (x * A + C) % M
 
@@ -39,9 +38,8 @@ object TokenSequences {
     * scaladoc for the measurements). The five GetStructField readers
     * below collapse to a single evaluation per row via codegen
     * subexpression elimination. */
-  def withSequenceColumns(df: DataFrame, seqId: Column,
-      maxTok: Int = MaxTok): DataFrame = {
-    val meta = graft.functions.SeqMeta(seqId, maxTok)
+  def withSequenceColumns(df: DataFrame, seqId: Column): DataFrame = {
+    val meta = graft.functions.SeqMeta(seqId)
     // tokens stay a SEPARATE TokenGen column (not a SeqMeta field):
     // Catalyst prunes whole columns but not struct fields of an opaque
     // expression, and the SQL-path / route-aggregate gates never read
@@ -56,14 +54,12 @@ object TokenSequences {
   /** The pre-round-6 declarative formulation, kept as the parity oracle
     * for [[graft.functions.SeqMeta]] (PipelineSpec asserts field-level
     * equality across a range of seqIds incl. the arithmetic-id extremes). */
-  private[graft] def withSequenceColumnsDeclarative(df: DataFrame, seqId: Column,
-      maxTok: Int = MaxTok): DataFrame = {
+  private[graft] def withSequenceColumnsDeclarative(df: DataFrame, seqId: Column): DataFrame = {
     val s = ((seqId % M) * 131071L + 524287L) % M
     val r1 = lcg(s)
     val r2 = lcg(r1)
     val r3 = lcg(r2)
-    val nTok = least(lit(8) + (r1 % 45) * (r2 % 46), lit(maxTok))
-      .cast(IntegerType)
+    val nTok = (lit(8) + (r1 % 45) * (r2 % 46)).cast(IntegerType)
     val source = when(r2 % 100 < 45, lit("web"))
       .when(r2 % 100 < 62, lit("books"))
       .when(r2 % 100 < 72, lit("code"))
@@ -121,18 +117,12 @@ object TokenSequences {
   }
 
   /** Scale variant for bench: n rows straight from `spark.range` —
-    * embarrassingly parallel, zero input IO, any target size.
-    *
-    * `maxTok` caps `n_tok` (payload-sweep diagnostic: running the SAME
-    * pipeline pair at shrinking token payloads separates the plan's
-    * intrinsic N→4N scaling from the host's shared-bus ceiling — the
-    * per-row work outside the token payload is unchanged, so any
-    * efficiency recovered as bytes/row shrink was bus-bound, not
-    * plan-bound). Default leaves the BASELINE distribution untouched. */
-  def synthetic(spark: SparkSession, n: Long, partitions: Int,
-      maxTok: Int = MaxTok): DataFrame = {
+    * embarrassingly parallel, zero input IO, any target size. `n_tok`
+    * follows the BASELINE distribution, 8 to 1,988 tokens per row
+    * (8 + 44·45 is the largest value the generator's formula can give). */
+  def synthetic(spark: SparkSession, n: Long, partitions: Int): DataFrame = {
     val base = spark.range(0, n, 1, partitions).select(col("id").as("seq_id"))
-    withSequenceColumns(base, col("seq_id"), maxTok)
+    withSequenceColumns(base, col("seq_id"))
       .select("doc_id", "tokens", "n_tok", "source", "__r3")
   }
 

@@ -95,8 +95,8 @@ object PipelineQueries {
       val seqs = TokenSequences.fromLineitem(s, dir)
       val routed = LogPipeline.parseEnrichRoute(s, seqs, partitions = 32,
         packTransport = true, unpackAfter = false)
-      val expect = graft.functions.TokenGenPacked(
-        substring(col("doc_id"), 5, 24).cast(LongType), col("n_tok"))
+      val expect = graft.functions.PackTokens(graft.functions.TokenGen(
+        substring(col("doc_id"), 5, 24).cast(LongType), col("n_tok")))
       routed.withColumn("tokens_expect", expect)
         .groupBy(col("sink"))
         .agg(count(lit(1)).as("n"),

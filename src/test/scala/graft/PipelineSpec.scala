@@ -32,26 +32,23 @@ class PipelineSpec extends SparkSpec {
     // call (the per-column arithmetic inflated the fused map-stage
     // method past the JIT compile limit). Must agree field-for-field
     // with the old formulation, including arithmetic-id extremes near
-    // fromLineitem's key-bound envelope and the maxTok cap.
+    // fromLineitem's key-bound envelope.
     val extremes = Seq(0L, 1L, 2147483647L, 2147483648L, 4294967296L,
       (268435455L * 34359738368L) + (7L * 4294967296L) + (262143L * 16384L) + 16383L)
     val ids = spark.range(0, 3000).select(col("id").as("seq_id"))
       .union(extremes.toDF("seq_id"))
-    for (cap <- Seq(TokenSequences.MaxTok, 64)) {
-      val a = TokenSequences.withSequenceColumns(ids, col("seq_id"), cap)
-        .orderBy(col("seq_id")).collect()
-      val b = graft.pipeline.TokenSequences
-        .withSequenceColumnsDeclarative(ids, col("seq_id"), cap)
-        .orderBy(col("seq_id")).collect()
-      assert(a.length === b.length)
-      a.zip(b).foreach { case (x, y) =>
-        assert(x.getAs[String]("doc_id") === y.getAs[String]("doc_id"))
-        assert(x.getAs[Int]("n_tok") === y.getAs[Int]("n_tok"))
-        assert(x.getSeq[Int](x.fieldIndex("tokens")).toSeq ===
-          y.getSeq[Int](y.fieldIndex("tokens")).toSeq)
-        assert(x.getAs[String]("source") === y.getAs[String]("source"))
-        assert(x.getAs[Long]("__r3") === y.getAs[Long]("__r3"))
-      }
+    val a = TokenSequences.withSequenceColumns(ids, col("seq_id"))
+      .orderBy(col("seq_id")).collect()
+    val b = TokenSequences.withSequenceColumnsDeclarative(ids, col("seq_id"))
+      .orderBy(col("seq_id")).collect()
+    assert(a.length === b.length)
+    a.zip(b).foreach { case (x, y) =>
+      assert(x.getAs[String]("doc_id") === y.getAs[String]("doc_id"))
+      assert(x.getAs[Int]("n_tok") === y.getAs[Int]("n_tok"))
+      assert(x.getSeq[Int](x.fieldIndex("tokens")).toSeq ===
+        y.getSeq[Int](y.fieldIndex("tokens")).toSeq)
+      assert(x.getAs[String]("source") === y.getAs[String]("source"))
+      assert(x.getAs[Long]("__r3") === y.getAs[Long]("__r3"))
     }
   }
 
@@ -191,14 +188,56 @@ class PipelineSpec extends SparkSpec {
     cmp.collect().foreach(r => assert(r.getString(0) === r.getString(1)))
   }
 
-  test("TokenGenPacked is byte-identical to pack_tokens(token_gen(...))") {
-    import graft.functions.{PackTokens, TokenGenPacked}
-    val both = seqs.limit(2000).select(
-      TokenGenPacked(substring(col("doc_id"), 5, 24).cast("long"), col("n_tok")).as("a"),
-      PackTokens(graft.functions.TokenGen(
-        substring(col("doc_id"), 5, 24).cast("long"), col("n_tok"))).as("b"))
-    assert(both.filter(col("a") =!= col("b")).count() === 0)
-    assert(both.count() === 2000)
+  /** Packed bytes (None for NULL), or the IllegalArgumentException's message. */
+  private def packOutcome(f: => Array[Byte]): Either[String, Option[Seq[Byte]]] =
+    try Right(Option(f).map(_.toSeq)) catch { case e: IllegalArgumentException => Left(e.getMessage) }
+
+  test("computePacked ≡ pack_tokens(token_gen) on every Long seq id, errors included") {
+    // The fused writer must be exactly as strict as PackTokens: negative
+    // seqIds can drive the generator's chain below zero, and both paths
+    // must then reject the same token at the same index.
+    import graft.functions.{PackTokens, TokenGen}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val seqId = Gen.frequency(
+      8 -> Gen.choose(Long.MinValue, Long.MaxValue),
+      1 -> Gen.oneOf(Long.MinValue, -1L, 0L, 1L, Long.MaxValue))
+    val cases = Gen.listOfN(3000, Gen.zip(seqId, Gen.choose(-2, 2100)))
+      .apply(Gen.Parameters.default, Seed(11L)).get
+    val outcomes = cases.map { case (s, n) =>
+      val fused = packOutcome(TokenGen.computePacked(s, n))
+      val twoStep = packOutcome(PackTokens.compute(TokenGen.compute(s, n)))
+      assert(fused === twoStep, s"seqId=$s nTok=$n")
+      fused
+    }
+    // both outcomes are exercised: the property is not vacuous
+    assert(outcomes.count(_.isLeft) > 100 && outcomes.count(_.isRight) > 100)
+  }
+
+  test("PackTokens(TokenGen) fused codegen matches eval, incl. a throwing negative id") {
+    import graft.functions.{PackTokens, TokenGen}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val expr = PackTokens(TokenGen(
+      BoundReference(0, LongType, nullable = true), BoundReference(1, IntegerType, nullable = true)))
+    val genCode = expr.genCode(new CodegenContext).code.toString
+    assert(genCode.contains("TokenGen.computePacked(") && !genCode.contains("PackTokens.compute("),
+      s"PackTokens over TokenGen did not fuse:\n$genCode")
+    // compiled directly: no silent fallback to interpreted evaluation
+    val generated = GenerateUnsafeProjection.generate(Seq(expr), false)
+    def viaCodegen(row: InternalRow) = packOutcome(generated(row).getBinary(0))
+    def viaEval(row: InternalRow) = packOutcome(expr.eval(row).asInstanceOf[Array[Byte]])
+    // seq ids of both signs across the Long range, nTok up to 2,099
+    val rows = (0L until 4000L).map(i => InternalRow(i * 0x9E3779B97F4A7C15L, (i % 2100).toInt))
+    rows.foreach(r => assert(viaCodegen(r) === viaEval(r), s"row $r"))
+    val throwing = InternalRow(-1469723409878432578L, 16)
+    assert(viaEval(throwing).left.exists(_.contains("outside uint16")))
+    assert(viaCodegen(throwing) === viaEval(throwing))
+    Seq(InternalRow(null, 5), InternalRow(7L, null)).foreach { r =>
+      assert(viaCodegen(r) === Right(None) && viaEval(r) === Right(None))
+    }
   }
 
   test("snapshot write + commit + time-travel read") {

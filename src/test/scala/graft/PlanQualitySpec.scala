@@ -18,6 +18,15 @@ class PlanQualitySpec extends SparkSpec {
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString()
 
+  /** Runs `body` with AQE off: the static plan then holds every
+    * whole-stage codegen subtree without running the query. */
+  private def withoutAqe[T](body: => T): T = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try body finally prior.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
   test("filter + projection reach the parquet scan (PushedFilters, pruned ReadSchema)") {
     val df = RelationalQueries.queries("q_filter_project")(spark, dir)
     val scan = df.queryExecution.executedPlan.toString()
@@ -67,21 +76,27 @@ class PlanQualitySpec extends SparkSpec {
     val plan = executedPlan(LogPipeline.parseEnrichRoute(spark, seqs, 4, packTransport = true))
     val iUnpack = plan.indexOf("unpack_tokens")
     val iExchange = plan.indexOf("Exchange")
-    // the pack side is either pack_tokens(...) over an arbitrary input
-    // column, or (round 6) the fused token_gen_packed when the column IS
-    // the generator — FusePackedTokenGen removes the int-array
-    // intermediate. Negative lookbehind: "pack_tokens(" is a substring
-    // of "unpack_tokens(".
-    val iPack = "(?<!un)pack_tokens\\(|token_gen_packed\\(".r
+    // negative lookbehind: "pack_tokens(" is a substring of "unpack_tokens("
+    val iPack = "(?<!un)pack_tokens\\(".r
       .findFirstMatchIn(plan).map(_.start).getOrElse(-1)
     assert(iUnpack >= 0 && iExchange >= 0 && iPack >= 0,
       s"pack/unpack/exchange missing from route plan:\n$plan")
     assert(iUnpack < iExchange && iExchange < iPack,
       s"pack/unpack collapsed across the exchange:\n$plan")
-    // the synthetic seqs' tokens ARE the generator, so the fusion must
-    // actually have fired here
-    assert(plan.contains("token_gen_packed"),
-      s"FusePackedTokenGen did not fire on the generator input:\n$plan")
+    // the synthetic seqs' tokens (and q_pipe_tokeq's expectation) ARE the
+    // generator, so PackTokens' codegen must write the packed bytes
+    // directly and never pack a materialized int array
+    withoutAqe {
+      Seq("parseEnrichRoute(packTransport)" -> LogPipeline.parseEnrichRoute(spark, seqs, 4,
+          packTransport = true),
+        "q_pipe_tokeq" -> SparkEntry.queries("q_pipe_tokeq")(spark, dir)).foreach {
+        case (name, df) =>
+          val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+          assert(code.contains("graft.functions.TokenGen.computePacked(") &&
+            !code.contains("graft.functions.PackTokens.compute("),
+            s"$name: pack_tokens(token_gen(..)) not fused in the generated code")
+      }
+    }
   }
 
   test("parse row-match runs as a fenced projection column, not a pushed filter") {
@@ -119,12 +134,8 @@ class PlanQualitySpec extends SparkSpec {
     // a whole-stage codegen subtree past it runs interpreted, several
     // times slower, with unchanged results. The pipeline map stage once
     // sat there unnoticed (CollapseProject had fused it past the limit);
-    // the largest method since measured 6,245 B (q_sql_interval). AQE
-    // off: the static plan holds every codegen subtree without running.
-    val aqe = "spark.sql.adaptive.enabled"
-    val prior = spark.conf.getOption(aqe)
-    spark.conf.set(aqe, "false")
-    try {
+    // the largest method since measured 6,245 B (q_sql_interval).
+    withoutAqe {
       val plans = Seq("q_sql_interval", "q_pipe_tokeq", "q_quality", "q_pipe_enrich",
         "q_pipe_route").map(q => q -> SparkEntry.queries(q)(spark, dir)) :+
         ("parseEnrichRoute(packTransport)" -> LogPipeline.parseEnrichRoute(spark,
@@ -136,7 +147,7 @@ class PlanQualitySpec extends SparkSpec {
       }
       val over = largest.filter(_._2 >= 8000)
       assert(over.isEmpty, s"methods past the JIT limit: ${over.mkString(", ")}")
-    } finally prior.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
   }
 
   test("pipeline enrich broadcasts the dimension and keeps left-outer rows") {
